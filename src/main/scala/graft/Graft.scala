@@ -17,6 +17,8 @@ import org.apache.spark.sql.SparkSession
   *    ~2-3x total executor cores (AQE coalesces down, so erring high is safe).
   *  - UTC session timezone: determinism for the DuckDB oracle and for any
   *    cross-timezone cluster.
+  *  - GraftExtensions: the graft functions and rules, including
+  *    plans.HoistLiterals, so repeated query shapes reuse compiled code.
   */
 object Graft {
   def session(cores: Int = 32, appName: String = "graft"): SparkSession = {
@@ -32,6 +34,7 @@ object Graft {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

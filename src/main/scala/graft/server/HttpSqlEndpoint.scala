@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, ScheduledThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
 /** The reference's ACTUAL broker wire protocol (SURVEY.md §2.1 S11): HTTP
   * `POST /query/sql` with a `{"sql": "..."}` body, answered in the Pinot
@@ -190,13 +191,33 @@ object HttpSqlEndpoint {
     (rest, opts.result())
   }
 
+  /** One daemon thread for every request's deadline: a timed request
+    * schedules the cancel of its job group here instead of running on a
+    * thread of its own. A request that finishes first removes its
+    * deadline, so the queue holds only requests still running. */
+  private val deadlines = {
+    val pool = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
+      val t = new Thread(r, "graft-http-sql-deadlines")
+      t.setDaemon(true)
+      t
+    })
+    pool.setRemoveOnCancelPolicy(true)
+    pool
+  }
+
   /** Execute `sql` on `spark` and render the Pinot broker response JSON.
+    * Every request runs on the calling thread under its own job group.
     * `queryOptions` honors `timeoutMs` (Pinot's per-query broker timeout):
-    * the query runs in its own job group and a timeout CANCELS the Spark
-    * jobs (no orphaned work) and answers in-band with Pinot's
+    * the deadline cancels the group's running and future Spark jobs (no
+    * orphaned work) and the request answers in-band with Pinot's
     * execution-timeout error class (code 235), still HTTP 200. */
   private[server] def answer(spark: SparkSession, rawSql: String, maxRows: Int,
-      requestOptions: Map[String, String] = Map.empty): ObjectNode =
+      requestOptions: Map[String, String] = Map.empty): ObjectNode = {
+    val sc = spark.sparkContext
+    val group = s"graft-http-sql-${java.util.UUID.randomUUID()}"
+    val expiredAfterMs = new AtomicLong(-1L) // set when the deadline fires
+    def timedOut(): ObjectNode = errorResponse(235,
+      s"query timed out after ${expiredAfterMs.get} ms (queryOptions timeoutMs)")
     try {
       val (sql0, setOptions) = extractSetOptions(rawSql)
       // broker canonicalizations: GAPFILL table-function spelling +
@@ -209,32 +230,21 @@ object HttpSqlEndpoint {
         case _ =>
       }
       val t0 = System.nanoTime()
+      // job groups are thread-local: the group covers this thread's jobs
+      // and the adaptive stages it submits, and nothing else
+      sc.setJobGroup(group, sql, interruptOnCancel = true)
       val df = spark.sql(sql)
       val limited = df.limit(maxRows + 1) // counters read from THIS execution
-      val timeoutMs = queryOptions.get("timeoutMs").map(_.toLong)
-      val rows = timeoutMs match {
-        case None => limited.collect()
-        case Some(t) =>
-          val group = s"graft-http-sql-${java.util.UUID.randomUUID()}"
-          val exec = Executors.newSingleThreadExecutor()
-          val fut = exec.submit(new java.util.concurrent.Callable[Array[org.apache.spark.sql.Row]] {
-            override def call(): Array[org.apache.spark.sql.Row] = {
-              // job group is thread-local: set it on the executing thread so
-              // cancelJobGroup reaches exactly this query's jobs
-              spark.sparkContext.setJobGroup(group, sql, interruptOnCancel = true)
-              try limited.collect()
-              finally spark.sparkContext.clearJobGroup()
-            }
-          })
-          try fut.get(t, java.util.concurrent.TimeUnit.MILLISECONDS)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              spark.sparkContext.cancelJobGroup(group)
-              fut.cancel(true)
-              return errorResponse(235,
-                s"query timed out after ${t} ms (queryOptions timeoutMs)")
-          } finally exec.shutdown()
+      val deadline = queryOptions.get("timeoutMs").map(_.toLong).map { t =>
+        deadlines.schedule(new Runnable {
+          override def run(): Unit = {
+            expiredAfterMs.set(t)
+            sc.cancelJobGroupAndFutureJobs(group)
+          }
+        }, t, TimeUnit.MILLISECONDS)
       }
+      val rows = try limited.collect() finally deadline.foreach(_.cancel(false))
+      if (expiredAfterMs.get >= 0) return timedOut()
       val (docsScanned, segmentsQueried) = scanCounters(limited)
       val truncated = rows.length > maxRows
       val emit = if (truncated) rows.take(maxRows) else rows
@@ -260,10 +270,13 @@ object HttpSqlEndpoint {
       root.put("numSegmentsQueried", segmentsQueried)
       root
     } catch {
+      // a query whose deadline fired fails with the cancellation
+      case _: Exception if expiredAfterMs.get >= 0 => timedOut()
       // Pinot SQL errors come back in-band as QueryException entries, not
       // as HTTP failures — error code 150 = SQL parsing/execution
       case e: Exception => errorResponse(150, String.valueOf(e.getMessage))
-    }
+    } finally sc.clearJobGroup()
+  }
 
   private def respond(ex: HttpExchange, status: Int, body: ObjectNode): Unit = {
     val bytes = mapper.writeValueAsBytes(body)

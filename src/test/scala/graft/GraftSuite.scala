@@ -18,6 +18,7 @@ trait GraftSuite extends AnyFunSuite {
       // compat vocabulary over JDBC; no effect outside the Thrift server
       .config("spark.sql.hive.thriftServer.singleSession", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(s)

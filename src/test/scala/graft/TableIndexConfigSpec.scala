@@ -124,8 +124,9 @@ class TableIndexConfigSpec extends GraftSuite {
   }
 
   test("the reference's own table config applies cleanly (no index families)") {
-    val json = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/resources/pinot/resources/kinesisTableConfigFile.json")))
+    // a reconstruction of the reference's REALTIME table config, vendored
+    // as a test resource (see reference/README.md next to it)
+    val json = scala.io.Source.fromResource("reference/kinesisTableConfigFile.json").mkString
     val dir = Files.createTempDirectory("graft-idxcfg-ref").toString
     Tables.t(spark, sfDir, "events").select("event_id", "user_id")
       .write.mode("overwrite").parquet(dir)
